@@ -91,13 +91,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .fsutil import exclusive_flock
-
-#: per-(store root, table) parquet schema, learned at first read — artifact
-#: schemas are fixed by their writers for the life of a store, so later
-#: reads skip the eager footer-inference driver cost (see CorpusStore.read).
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 #: manifest file name — the store's single source of truth for table
 #: generations and codebook version; every structural change is one atomic
@@ -251,6 +247,10 @@ class CorpusStore:
         correctness — visibility flips with the manifest either way."""
         self.orphan_retention_s = float(orphan_retention_s)
         self.root = root
+        #: per-table parquet schema, learned at this handle's first read of
+        #: the table and dropped whenever this handle rewrites it, so later
+        #: reads skip the eager footer inference (see :meth:`read`)
+        self._schemas: dict[str, StructType] = {}
         mpath = os.path.join(root, MANIFEST)
         if os.path.exists(mpath):
             with open(mpath) as f:
@@ -560,6 +560,7 @@ class CorpusStore:
         for name in self._m["tables"]:
             slice_dir = os.path.join(self._tdir(name), f"batch_id={batch_id}")
             tables[name].write.mode("overwrite").parquet(slice_dir)
+            self._schemas.pop(name, None)
             # durability barrier: the slice's bytes must be on disk BEFORE
             # the commit marker can be (write-ahead ordering — a durable
             # marker over volatile data is the torn state the marker
@@ -620,22 +621,21 @@ class CorpusStore:
             raise ValueError(
                 f"store table {name} has no committed slices at {tdir}"
             )
-        # an artifact table's schema is fixed by its writer for the life of
-        # the store, so cache it after the first read and pass it explicitly
-        # thereafter: parquet schema inference reads file footers EAGERLY at
-        # DataFrame creation, a per-invocation driver cost the serve path
-        # pays once per table (guide §7.3 driver-overhead class). The slice
+        # an artifact table's schema changes only when it is written, so
+        # cache it after the first read and pass it explicitly until this
+        # handle writes the table again: parquet schema inference reads
+        # file footers EAGERLY at DataFrame creation, a per-invocation
+        # Spark-driver cost the serve path pays once per table. The slice
         # LISTING above stays fresh on every read — only the schema is
         # reused (it includes the batch_id partition column, so partition
         # value parsing is unchanged).
-        key = (self.root, name)
         reader = spark.read.option("basePath", tdir)
-        cached = _SCHEMA_CACHE.get(key)
+        cached = self._schemas.get(name)
         if cached is not None:
             reader = reader.schema(cached)
         df = reader.parquet(*sorted(dirs))
         if cached is None:
-            _SCHEMA_CACHE[key] = df.schema
+            self._schemas[name] = df.schema
         return df
 
     def _retained_ids(self) -> list[int]:
@@ -822,6 +822,7 @@ class CorpusStore:
             self._tdir(assigned_table, new_gen), f"batch_id={hi}"
         )
         reassigned.write.mode("overwrite").parquet(out)
+        self._schemas.pop(assigned_table, None)
         _fsync_tree(out)
         old_gen = self._m["tables"][assigned_table]
         self._m["codebook_version"] = new_v
@@ -1013,6 +1014,7 @@ class CorpusStore:
                 combined = combined.coalesce(target_partitions)
             out = os.path.join(self._tdir(name, gen), f"batch_id={hi}")
             combined.write.mode("overwrite").parquet(out)
+            self._schemas.pop(name, None)
             _fsync_tree(out)
             # NOT-compacted slices carry over byte-identical (hard links,
             # no rewrite) so the generation flip stays all-or-nothing
@@ -1111,6 +1113,7 @@ class CorpusStore:
         ).coalesce(1)
         out = os.path.join(self._tdir(bloom_table, gen), f"batch_id={hi}")
         fresh.write.mode("overwrite").parquet(out)
+        self._schemas.pop(bloom_table, None)
         _fsync_tree(out)
         old_gen = self._m["tables"][bloom_table]
         self._m["tables"][bloom_table] = gen

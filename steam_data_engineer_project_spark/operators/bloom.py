@@ -67,6 +67,15 @@ def _positions(col, m_bits: int, n_hashes: int, salt: str):
     )
 
 
+def _check_params(m_bits: int, n_hashes: int) -> None:
+    """Reject parameters that would make membership meaningless: a partial
+    last word, or zero hash functions (every probed value would hit)."""
+    if m_bits % _WORD_BITS:
+        raise ValueError(f"m_bits must be a multiple of {_WORD_BITS}")
+    if n_hashes < 1:
+        raise ValueError(f"n_hashes must be at least 1, got {n_hashes}")
+
+
 def bloom_bitset(
     df: DataFrame,
     value_col: str,
@@ -92,8 +101,7 @@ def bloom_bitset(
     separate builds (distinct/position math is per group; the same hash
     family applies). The per-shard/per-day build then scans its input
     once instead of once per shard (round 13, guide §2.4)."""
-    if m_bits % _WORD_BITS:
-        raise ValueError(f"m_bits must be a multiple of {_WORD_BITS}")
+    _check_params(m_bits, n_hashes)
     g = [group_col] if group_col else []
     pos = (
         df.select(*g, F.col(value_col).alias("__v"))
@@ -153,6 +161,7 @@ def bloom_probe_count(
     pass it when the input is already a distinct-pairs table (e.g.
     :func:`operators.dedup.shingle_table` output) and the probe then
     runs shuffle-free up to the final count."""
+    _check_params(m_bits, n_hashes)
     probes = df.select(F.col(id_col), F.col(value_col).alias("__v")).where(
         F.col("__v").isNotNull()
     )

@@ -382,31 +382,3 @@ def quantize_int8(vec: Column | str) -> Column:
         vec, lambda x: F.floor(x.cast("double") * scale + F.lit(0.5))
     )
 
-
-def quantized_cosine_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_vec: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """Approximate cosine top-k over int8-quantized vectors.
-
-    Returns (id_col, q_cosine): cosine computed on the quantized
-    representations (the per-vector scales cancel), rounded to 6 places,
-    ties broken by id. Same plan shape as brute_force_cosine_topk — a scan
-    plus TakeOrderedAndProject — but the arithmetic is over small integers.
-    """
-    import math
-
-    amax = max((abs(float(v)) for v in query_vec), default=0.0)
-    scale = 127.0 / max(amax, 1e-30)
-    q = F.array(
-        *[F.lit(float(math.floor(float(v) * scale + 0.5))) for v in query_vec]
-    )
-    qv = quantize_int8(vec_col)
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine_similarity(qv, q), 6).alias("q_cosine"),
-    )
-    return scored.orderBy(F.desc("q_cosine"), F.asc(id_col)).limit(k)

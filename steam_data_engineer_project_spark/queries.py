@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import math
 import os
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -32,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .context import context
 from .corpus_store import CorpusStore
 from .operators.bloom import bloom_bitset, bloom_merge, bloom_probe_count
 from .operators.dedup import (
@@ -156,18 +156,41 @@ class QuerySpec:
     doc: str
 
 
-#: Per-session catalog cache: (abs sf_dir, table) → DataFrame. A DataFrame
-#: is an immutable logical plan, so handing the same one to every query is
-#: exactly what a catalog does — and skips the ~100 ms of JVM file-listing +
-#: footer-schema work `spark.read.parquet` pays per call. Weakly keyed so a
-#: stopped session releases its plans.
-_CATALOG: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+# Run context: what the query layer keeps between invocations belongs to
+# the session's RunContext (context.py). It owns the memo — table reads,
+# spread tables, the model DAG, written fixtures, the ANN layout, the IVF
+# codebook and the corpus store, each built once per (session, sf_dir) —
+# the scratch root .scratch/run_<pid>_<random>, under which every work dir
+# a query writes is created, and each query slot's persisted frames. The
+# root and the persists are released when the session is collected, at
+# interpreter exit, or on RunContext.close(); another process removes a
+# root only after its owning process has exited.
+
+
+def _memo(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build()`` once per (session, sf_dir, name)."""
+    return context(spark).memo((os.path.abspath(sf_dir), name), build)
+
+
+def _cached_fixture(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
+    """Build-once fixture (event JSONL, raw CSV, …) derived from source
+    tables: ``build(dir)`` writes it into a fresh scratch dir on the
+    session's first request, and later invocations reuse that dir, so a
+    timed body measures the pipeline instead of re-serializing its input."""
+
+    def _build() -> str:
+        d = context(spark).scratch(f"fixture_{kind}_")
+        build(d)
+        return d
+
+    return _memo(spark, sf_dir, f"__fixture_{kind}__", _build)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read a driver parquet table (cached per session — see _CATALOG).
+    """Read a source parquet table, once per session (a DataFrame is an
+    immutable plan, so handing the same one to every query is what a
+    catalog does, and skips the file listing and footer read of a new
+    ``spark.read.parquet``).
 
     ``events.ts`` has shipped in two physical generations: TIMESTAMP(NANOS)
     (which Spark's parquet reader rejects — read as raw nanos via the legacy
@@ -176,33 +199,27 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     type the reader produces so both generations yield identical µs-precision
     event times.
     """
-    import os
-
     # The caller may hand us an untuned session (the driver does); pin the
     # two semantics-bearing confs every query depends on. Both are
     # runtime-settable. UTC makes from_unixtime/epoch outputs match the
     # (timezone-naive) DuckDB oracle regardless of host TZ.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    per = _CATALOG.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), name)
-    if key in per:
-        return per[key]
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
+
+    def _read() -> DataFrame:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if name != "events":
+            return spark.read.parquet(path)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        else:
-            # TIMESTAMP(MICROS) generation arrives as TIMESTAMP_NTZ; cast to
-            # session-zoned TIMESTAMP (session TZ is pinned UTC above) so
-            # unix_micros()/window() downstream see the same epoch values
-            # DuckDB's epoch_us() reads off the naive column.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(path)
-    per[key] = df
-    return df
+            return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        # TIMESTAMP(MICROS) generation arrives as TIMESTAMP_NTZ; cast to
+        # session-zoned TIMESTAMP (session TZ is pinned UTC above) so
+        # unix_micros()/window() downstream see the same epoch values
+        # DuckDB's epoch_us() reads off the naive column.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    return _memo(spark, sf_dir, name, _read)
 
 
 #: every driver-provided parquet table
@@ -250,17 +267,17 @@ def _spread(
     NO-OP at scale: a well-partitioned 100 TB table (thousands of files)
     never reshuffles to satisfy a local-mode artifact. Catalyst pushes
     column pruning through the repartition, so downstream projections still
-    reach the scan. Cached per session like every catalog entry.
+    reach the scan. Built once per session like every catalog entry.
     """
-    per = _CATALOG.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), f"__spread_{name}_{key_col}__")
-    if key not in per:
+
+    def _build() -> DataFrame:
         d = _t(spark, sf_dir, name)
         target = spark.sparkContext.defaultParallelism
         if d.rdd.getNumPartitions() < target:
             d = d.repartition(target, key_col)
-        per[key] = d
-    return per[key]
+        return d
+
+    return _memo(spark, sf_dir, f"__spread_{name}_{key_col}__", _build)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,207 +294,10 @@ def _norm_tokens(col: str = "text"):
     return F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
 
 
-_SCRATCH_REAPED = False
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Fresh scratch dir under <repo>/.scratch (gitignored) — streaming
-    queries materialize event files + checkpoints there; a new dir per
-    invocation keeps repeated runs (driver, bench, tests) independent.
-    Sibling dirs untouched for >1 h are reaped best-effort so repeated
-    bench/driver runs don't accumulate unboundedly.
-
-    Reaping runs ONCE PER PROCESS: the walk is O(whole .scratch tree) and
-    `.scratch` accumulates across driver rounds, so charging it to every
-    scratch-using query invocation polluted the bench metric (round-4
-    verdict finding #1 — untouched plans inflated ~1.5× purely from this
-    fixed cost). One sweep at first use bounds growth identically."""
-    import tempfile
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
-    )
-    os.makedirs(base, exist_ok=True)
-    global _SCRATCH_REAPED
-    if not _SCRATCH_REAPED:
-        _SCRATCH_REAPED = True
-        _reap_scratch(base)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-
-def _reap_scratch(base: str) -> None:
-    """Best-effort sweep of stale scratch dirs (>1 h untouched) and cached
-    ingest layouts (>24 h) — see _scratch_dir for the once-per-process
-    rationale."""
-    import shutil
-    import time
-
-    cutoff = time.time() - 3600
-
-    def _newest_mtime(root: str) -> float:
-        # A live streaming query updates checkpoint files deep inside the
-        # dir without touching the top-level mtime — reap only when NOTHING
-        # in the tree has been written since the cutoff, so a concurrent
-        # long run can never lose its checkpoint mid-stream.
-        newest = os.path.getmtime(root)
-        for dirpath, _dirnames, filenames in os.walk(root):
-            newest = max(newest, os.path.getmtime(dirpath))
-            for fn in filenames:
-                try:
-                    newest = max(
-                        newest, os.path.getmtime(os.path.join(dirpath, fn))
-                    )
-                except OSError:
-                    pass
-        return newest
-
-    # cached ingest layouts get a much longer cutoff than work dirs: content
-    # fingerprinting already retires stale ones from use, so the only risk
-    # of reaping is a read that started >24 h after the layout was built —
-    # and a reaped layout is rebuilt on next use anyway.
-    # cstore_/ivfcb_ are SERVED artifact stores cached in a session's
-    # _CATALOG: a concurrent process reaping one mid-read would yank a
-    # live plan's parquet out from under it (round-7 ADVICE). They get the
-    # 24 h class AND their owners os.utime() them on every catalog hit, so
-    # only a session idle for >24 h can lose one — and the exists-guard
-    # rebuilds it on the next invocation.
-    cache_cutoff = time.time() - 24 * 3600
-    for name in os.listdir(base):
-        p = os.path.join(base, name)
-        try:
-            if name.startswith(("ann_layout_", "fixture_", "cstore_", "ivfcb_")):
-                if os.path.isdir(p) and _newest_mtime(p) < cache_cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-                continue
-            if os.path.isdir(p) and _newest_mtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-
-
-def _source_fingerprint(sf_dir: str, *names: str) -> str:
-    """Stable key over the given source parquet tables' file names, sizes,
-    and mtimes — regenerating a dataset in place changes the key, so cached
-    derivations (ingest layouts, event fixtures) can never serve stale
-    content for new data."""
-    import hashlib
-
-    parts = []
-    for name in names:
-        src = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
-        parts.append(src)
-        if os.path.isdir(src):
-            for fn in sorted(os.listdir(src)):
-                st = os.stat(os.path.join(src, fn))
-                parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(src):
-            st = os.stat(src)
-            parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
-
-
-def _builder_fingerprint(build) -> str:
-    """8-hex content fingerprint of a fixture builder: bytecode + names +
-    varnames + constants, with NESTED code objects (lambdas/comprehensions)
-    digested recursively by the same rule — their ``repr`` embeds a memory
-    address, which would change every process (cache never hits) while a
-    co_names-only edit would NOT change co_code/co_consts (stale hit)."""
-    import hashlib as _hl
-
-    def _code_digest(code) -> bytes:
-        h = _hl.md5(code.co_code)
-        h.update("\x00".join(code.co_names).encode())
-        h.update("\x00".join(code.co_varnames).encode())
-        for c in code.co_consts:
-            h.update(
-                _code_digest(c) if hasattr(c, "co_code") else repr(c).encode()
-            )
-        return h.hexdigest().encode()
-
-    return _code_digest(build.__code__)[:8].decode()
-
-
-def _cached_fixture(sf_dir: str, kind: str, sources: tuple, build) -> str:
-    """Build-once fixture (event JSONL, raw CSV, …) derived deterministically
-    from source tables: cached per (kind, source fingerprint) under
-    ``.scratch/fixture_{kind}_{key}/``. ``build(dir)`` runs only on a miss,
-    into a staging dir that is atomically renamed into place, so concurrent
-    builders can never expose a half-written fixture and repeated
-    bench/driver invocations measure the PIPELINE instead of re-serializing
-    its input every pass (round-4 verdict finding #2 — fixture writes were
-    dominating the streaming queries' timed bodies). ``os.rename`` preserves
-    file mtimes, so fixtures whose semantics ride on mtime order (the
-    windowed slices) survive the publish step intact.
-
-    The cache key also folds in a fingerprint of the BUILDER's bytecode,
-    names, and constants — editing ``build`` (a slice count, a schema
-    column, even a ``.text(...)``→``.json(...)`` swap that only changes
-    co_names) must miss the cache, or the edited query would silently run
-    against the pre-edit fixture until the 24 h reaper happened to collect
-    it. Nested code objects (lambdas/comprehensions inside the builder)
-    are digested recursively by CONTENT — ``repr`` of a code object embeds
-    a memory address, which would bust the cache every process and
-    silently accumulate fixture dirs."""
-    build_ver = _builder_fingerprint(build)
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
-    )
-    final = os.path.join(
-        base,
-        f"fixture_{kind}_{build_ver}_{_source_fingerprint(sf_dir, *sources)}",
-    )
-    marker = os.path.join(final, "_FIXTURE_OK")
-    if os.path.exists(marker):
-        # Reads never update mtimes; refresh so the 24 h cache reaper can't
-        # collect an actively-used fixture out from under a live session.
-        try:
-            os.utime(final)
-        except OSError:
-            pass
-        return final
-    stage = _scratch_dir("fixstage_")  # 1 h reap class: orphans die fast
-    build(stage)
-    with open(os.path.join(stage, "_FIXTURE_OK"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, final)
-    except OSError:
-        # Expected: a concurrent builder won — use theirs. If the rename
-        # failed for any OTHER reason the final dir won't be complete; our
-        # staged copy is, so fall back to it rather than erroring later.
-        if not os.path.exists(marker):
-            return stage
-    return final
-
-
 # Engine-portable aggregates (see functions/aggregates.py for the
 # determinism rationale) — short local aliases keep the query bodies tight.
 _dsum = dsum
 _davg = davg
-
-
-#: the PREVIOUS invocation's persisted frames, per query slot. Spark's
-#: CacheManager matches persists by canonicalized plan, so without this a
-#: bench pass N+1 would silently serve pass N's InMemoryRelation instead of
-#: recomputing from the parquet inputs — min-over-passes must stay a
-#: cold-cache signal (round-12 verdict hygiene item 5). Within ONE
-#: invocation the persists keep serving their multi-consumer purpose.
-_LIVE_PERSISTS: dict[str, list] = {}
-
-
-def _rotate_persists(slot: str, handles: list) -> None:
-    """Unpersist the previous invocation's persisted frames for ``slot``,
-    then register ``handles`` (if any) as the new generation. Query bodies
-    call this at ENTRY with ``[]`` — before their own persists exist, so
-    the new generation starts cold — and assign ``_LIVE_PERSISTS[slot]``
-    directly once the new frames are persisted."""
-    for df in _LIVE_PERSISTS.pop(slot, []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    if handles:
-        _LIVE_PERSISTS[slot] = handles
 
 
 # --------------------------------------------------------------------------
@@ -1782,47 +1602,23 @@ def ann_lsh_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to ann_lsh_topk by construction, so it shares its oracle —
     what this row proves is that the pruned LAYOUT returns the same answer.
 
-    The layout is CACHED per source (ingest-time cost, not per-query —
-    repeated bench/driver invocations measure the query, not the re-ingest);
-    staged via tmp + atomic rename so concurrent builders can't expose a
-    half-written layout. The cache key fingerprints the source file's
-    size+mtime, so regenerating the dataset in place gets a fresh layout
-    instead of silently stale buckets; superseded layouts age out via the
-    scratch reaper's 24 h cache cutoff."""
+    The layout is written once per session (the ingest-time cost, not a
+    per-query one), so repeated invocations measure the query, not the
+    re-ingest."""
     e = _t(spark, sf_dir, "embeddings")
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
-    )
-    key = _source_fingerprint(sf_dir, "embeddings")
-    layout = os.path.join(base, f"ann_layout_{key}", "embeddings_by_bucket")
-    if not os.path.exists(os.path.join(layout, "_SUCCESS")):
-        work = _scratch_dir("ann_pruned_")
-        tmp = os.path.join(work, "embeddings_by_bucket")
+
+    def _write_layout() -> str:
+        layout = os.path.join(
+            context(spark).scratch("ann_layout_"), "embeddings_by_bucket"
+        )
         e.select(
             "vec_id",
             "embedding",
             lsh_bucket_id(F.col("embedding"), 8).alias("bucket"),
-        ).write.partitionBy("bucket").mode("overwrite").parquet(tmp)
-        os.makedirs(os.path.dirname(layout), exist_ok=True)
-        try:
-            os.rename(tmp, layout)
-        except OSError:
-            # Expected cause: a concurrent builder won the rename — use
-            # theirs. But rename can also fail for EXDEV/permissions, and
-            # swallowing THAT would surface later as a confusing
-            # missing-path read error — so verify the winner actually
-            # exists, else fall back to reading our own staged copy.
-            if not os.path.exists(os.path.join(layout, "_SUCCESS")):
-                layout = tmp
-    else:
-        # Parquet READS never touch mtimes, so an actively-used layout
-        # could age past the reaper's 24 h cache cutoff while a cached
-        # DataFrame still points at it — refresh the clock on every hit.
-        try:
-            os.utime(os.path.dirname(layout))
-            os.utime(layout)
-        except OSError:
-            pass
+        ).write.partitionBy("bucket").mode("overwrite").parquet(layout)
+        return layout
+
+    layout = _memo(spark, sf_dir, "__ann_layout__", _write_layout)
     # the query vector is driver-side metadata (one row), as any ANN client's
     qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
     from .operators.similarity import lsh_bucket_cosine_topk_pruned
@@ -1978,24 +1774,21 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # train once → persist → serve from the store (kmeans runs HERE, at the
     # write action, never in the returned plan). The stored artifact is
-    # cached per (session, corpus) like every catalog entry: the FIRST
+    # built once per (session, corpus) like every catalog entry: the FIRST
     # invocation pays the train+write, every later one — bench repeats,
     # repeated driver actions, downstream consumers — reads k parquet rows,
     # which is the production steady state (a codebook is trained once per
-    # corpus release, then served). Existence is re-checked because the
-    # scratch reaper removes stale dirs (ivfcb_ gets the 24 h class, and
-    # the touch below marks a live one on every hit).
-    per = _CATALOG.setdefault(spark, {})
-    ckey = (os.path.abspath(sf_dir), "__ivf_codebook__")
-    if ckey not in per or not os.path.exists(per[ckey]):
-        cb_path = os.path.join(_scratch_dir("ivfcb_"), "codebook")
+    # corpus release, then served).
+    def _train_codebook() -> str:
+        cb_path = os.path.join(context(spark).scratch("ivfcb_"), "codebook")
         train_ivf_codebook(
             e, "embedding", "vec_id", n_centroids=16, n_iter=3
         ).write.mode("overwrite").parquet(cb_path)
-        per[ckey] = cb_path
-    else:
-        os.utime(os.path.dirname(per[ckey]))  # keep the reaper off a live codebook
-    stored_cb = spark.read.parquet(per[ckey])
+        return cb_path
+
+    stored_cb = spark.read.parquet(
+        _memo(spark, sf_dir, "__ivf_codebook__", _train_codebook)
+    )
     trained = ivf_topk_trained(
         e, "embedding", "vec_id", 0, k=10, n_probe=4, codebook=stored_cb
     ).select(
@@ -2308,8 +2101,9 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # drop the PREVIOUS invocation's caches before this one persists: a
     # later bench pass must recompute from the parquet inputs, not
-    # plan-match the earlier pass's InMemoryRelation (see _rotate_persists)
-    _rotate_persists("dedup_embedding_cosine", [])
+    # plan-match the earlier pass's InMemoryRelation
+    ctx = context(spark)
+    ctx.replace_persists("dedup_embedding_cosine", [])
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -2342,8 +2136,8 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted inside kmeans_int8), the corpus-side base the incremental
     # training persisted (corpus_q — persist() is in-place, the handle is
     # the frame itself), and the 4-consumer assignment frame. Registered
-    # for unpersist at the NEXT invocation's entry.
-    _LIVE_PERSISTS["dedup_embedding_cosine"] = [qdf, corpus_q, assigned]
+    # for unpersist at the NEXT invocation's entry or at context release.
+    ctx.replace_persists("dedup_embedding_cosine", [qdf, corpus_q, assigned])
     assign_leg = assigned.select(
         F.lit("assign").alias("part"),
         F.col("vec_id").alias("id_a"),
@@ -3104,7 +2898,7 @@ def sampling_split_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and summarizes them from the written bytes — so plan-only
     # consumers (explain, exchange counting) pay zero filesystem I/O
     # per build.
-    export_dir = _scratch_dir("shard_export")
+    export_dir = context(spark).scratch("shard_export")
     shard_exp = export_shards_on_materialize(
         with_tokens, "doc_id", "n_tokens", 16, export_dir
     ).select(
@@ -4148,15 +3942,15 @@ def _dag(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     mart queries share one DAG of immutable plans — rebuilding it per query
     would re-pay ~0.6 s of driver-side plan construction for identical
     results, which is not how a model registry is used."""
-    per = _CATALOG.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), "__model_dag__")
-    if key not in per:
+
+    def _build() -> dict[str, DataFrame]:
         tables = {
             name: _t(spark, sf_dir, name)
             for name in ("part", "supplier", "nation", "lineitem", "events")
         }
-        per[key] = build_models(steam_sources(spark, tables))
-    return per[key]
+        return build_models(steam_sources(spark, tables))
+
+    return _memo(spark, sf_dir, "__model_dag__", _build)
 
 
 def dbt_dim_games(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4482,7 +4276,7 @@ def src_csv_price_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     etl/extract/steam_crawl_price.py:14-17,61-68), read back through the
     declared PRICE_RAW_CSV schema (etl/transform/steam_transform_price.py:
     67-106), and run the reference transform chain from ``functions.scalars``.
-    The raw CSV fixture is cached per source fingerprint (_cached_fixture)
+    The raw CSV fixture is written once per session (_cached_fixture)
     so the timed body measures the parse chain, not the CSV write."""
 
     def _build(stage: str) -> None:
@@ -4504,7 +4298,7 @@ def src_csv_price_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     csv_dir = os.path.join(
-        _cached_fixture(sf_dir, "csv_price", ("lineitem",), _build), "price_raw"
+        _cached_fixture(spark, sf_dir, "csv_price", _build), "price_raw"
     )
     parsed = read_csv(spark, csv_dir, PRICE_RAW_CSV)
     cents = to_cents(F.col("price"))
@@ -4543,7 +4337,7 @@ def src_json_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every doc_id ≡ 7 (mod 10) is written as a broken line; the PERMISSIVE
     read routes valid rows onward and quarantines the rest. Returns one row
     per input line: (doc_id, n_chars, is_corrupt). The JSONL fixture is
-    cached per source fingerprint (_cached_fixture)."""
+    written once per session (_cached_fixture)."""
     from pyspark.sql import types as Ty
 
     def _build(stage: str) -> None:
@@ -4564,7 +4358,7 @@ def src_json_corrupt_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).text(os.path.join(stage, "docs_jsonl"))
 
     jsonl_dir = os.path.join(
-        _cached_fixture(sf_dir, "json_docs", ("documents",), _build),
+        _cached_fixture(spark, sf_dir, "json_docs", _build),
         "docs_jsonl",
     )
     schema = Ty.StructType(
@@ -4594,7 +4388,7 @@ def src_csv_incremental_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (etl/transform/steam_transform_price.py:67-95, utils/common.py:127-140).
     The processed set is the even orderkeys (a prior run); the resume run
     must emit exactly the odd ones — via one left_anti join, not a per-row
-    membership check. The CSV fixture is cached per source fingerprint
+    membership check. The CSV fixture is written once per session
     (_cached_fixture)."""
     o = _t(spark, sf_dir, "orders")
 
@@ -4610,7 +4404,7 @@ def src_csv_incremental_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     csv_dir = os.path.join(
-        _cached_fixture(sf_dir, "csv_orders", ("orders",), _build), "orders_csv"
+        _cached_fixture(spark, sf_dir, "csv_orders", _build), "orders_csv"
     )
 
     from pyspark.sql import types as Ty
@@ -4739,10 +4533,10 @@ def streaming_review_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     {latest-wins upsert keyed (appid, author_steamid), first-wins INSERT
     IGNORE summaries}. Returns the joined final state of both tables.
 
-    The event JSONL fixture is cached per source fingerprint
+    The event JSONL fixture is written once per session
     (_cached_fixture) — the timed body drains the stream, it doesn't
     re-serialize the input every invocation."""
-    work = _scratch_dir("stream_review_")
+    work = context(spark).scratch("stream_review_")
 
     def _build(stage: str) -> None:
         ev = _t(spark, sf_dir, "events").filter(
@@ -4764,7 +4558,7 @@ def streaming_review_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     events_dir = os.path.join(
-        _cached_fixture(sf_dir, "review_events", ("events",), _build), "events"
+        _cached_fixture(spark, sf_dir, "review_events", _build), "events"
     )
     out = run_review_pipeline(
         spark, events_dir, work, max_files_per_trigger=4, batch_shuffle_partitions=8
@@ -4841,10 +4635,10 @@ def streaming_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted table — any row compaction lost or duplicated shifts
     n_events or the latest row and breaks the oracle hash.
 
-    The event JSONL fixture is cached per source fingerprint
+    The event JSONL fixture is written once per session
     (_cached_fixture) — the timed body drains the stream, it doesn't
     re-serialize the input every invocation."""
-    work = _scratch_dir("stream_state_")
+    work = context(spark).scratch("stream_state_")
 
     def _build(stage: str) -> None:
         ev = _t(spark, sf_dir, "events").filter(
@@ -4863,7 +4657,7 @@ def streaming_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     events_dir = os.path.join(
-        _cached_fixture(sf_dir, "price_events", ("events",), _build), "events"
+        _cached_fixture(spark, sf_dir, "price_events", _build), "events"
     )
 
     # The two drains are INDEPENDENT streams over the same (read-only)
@@ -4976,10 +4770,10 @@ def streaming_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     index is ALSO embedded in each file name (slice{i}) so a future reader
     can reconstruct the intended order without trusting mtimes.
 
-    The slice fixture is cached per source fingerprint (_cached_fixture;
-    os.rename preserves the mtime stamps) — the timed body drains the
-    stream, it doesn't re-serialize the input every invocation."""
-    work = _scratch_dir("stream_window_")
+    The slice fixture is written once per session (_cached_fixture) —
+    the timed body drains the stream, it doesn't re-serialize the input
+    every invocation."""
+    work = context(spark).scratch("stream_window_")
 
     def _build(stage: str) -> None:
         import glob as _glob
@@ -5023,7 +4817,7 @@ def streaming_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(sentinel, (base_mtime + 2 * n_slices + 60,) * 2)
 
     events_dir = os.path.join(
-        _cached_fixture(sf_dir, "window_events", ("events",), _build), "events"
+        _cached_fixture(spark, sf_dir, "window_events", _build), "events"
     )
     out_dir = run_windowed_to_table(
         spark, events_dir, work, max_files_per_trigger=1,
@@ -6653,10 +6447,8 @@ def corpus_store_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     vgrp = F.col("vec_id") % 10
     vb2 = ev.filter(vgrp.isin(8, 9))
 
-    per = _CATALOG.setdefault(spark, {})
-    ckey = (os.path.abspath(sf_dir), "__corpus_store__")
-    if ckey not in per or not os.path.exists(per[ckey]):
-        root = _scratch_dir("cstore_")
+    def _build_store() -> CorpusStore:
+        root = context(spark).scratch("cstore_")
         base = d.filter(grp <= 5)
         vbase = ev.filter(vgrp <= 5)
         vb1 = ev.filter(vgrp.isin(6, 7))
@@ -6728,13 +6520,11 @@ def corpus_store_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pass's memory for nothing)
         for _p in build_persists:
             _p.unpersist()
-        per[ckey] = root
-    else:
-        # refresh the live store's mtime so the cross-process scratch
-        # reaper (24 h class for cstore_) can't delete it mid-session
-        os.utime(per[ckey])
+        return store
 
-    store = CorpusStore(per[ckey], tables=_ST_TABLES)
+    # the handle, not just the root, is memoized: its schema cache spares
+    # later invocations the eager footer read of every artifact table
+    store = _memo(spark, sf_dir, "__corpus_store__", _build_store)
     rd = lambda name: store.read(spark, name)
     hashes, shingles, windows = rd("hashes"), rd("shingles"), rd("windows")
     kmvs, blooms = rd("kmv"), rd("bloom")

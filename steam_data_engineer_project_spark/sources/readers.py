@@ -66,21 +66,6 @@ def read_json_recovering(
     )
 
 
-def split_corrupt(
-    df: DataFrame, *, corrupt_col: str = "_corrupt_record"
-) -> tuple[DataFrame, DataFrame]:
-    """Route a recovering read into (valid_rows, corrupt_rows).
-
-    The corrupt side keeps the declared columns alongside the raw line:
-    Spark refuses a scan whose only referenced column is the internal
-    corrupt-record column, so a quarantine query must carry at least one
-    real column (they are all null on corrupt rows anyway).
-    """
-    valid = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    corrupt = df.filter(F.col(corrupt_col).isNotNull())
-    return valid, corrupt
-
-
 def incremental_resume(
     incoming: DataFrame, processed: DataFrame, key_cols: list[str]
 ) -> DataFrame:

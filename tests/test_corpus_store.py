@@ -163,6 +163,31 @@ def test_batch_id_partition_column_and_pruned_reads(spark, tmp_path):
     )[1].split("]")[0], "batch_id filter did not prune at the scan"
 
 
+def test_read_schema_follows_rewrites_and_recreated_stores(spark, tmp_path):
+    """read() reuses a table's schema only until the table is rewritten: a
+    store deleted and recreated at the same root, and a re-admission by the
+    same handle, both serve their new column instead of a stale schema."""
+    import shutil
+
+    root = str(tmp_path / "s")
+    h = _docs(spark, range(4)).select(F.col("doc_id").alias("h"))
+    st = CorpusStore(root, tables=("hashes",))
+    st.admit({"hashes": h}, 0)
+    assert set(st.read(spark, "hashes").columns) == {"h", "batch_id"}
+
+    shutil.rmtree(root)
+    st = CorpusStore(root, tables=("hashes",))
+    st.admit({"hashes": h.withColumn("n", F.lit(1))}, 0)
+    df = st.read(spark, "hashes")
+    assert set(df.columns) == {"h", "n", "batch_id"}
+    assert df.filter("n = 1").count() == 4
+
+    st.admit({"hashes": h.withColumn("m", F.lit(2))}, 0)  # idempotent retry
+    df = st.read(spark, "hashes")
+    assert set(df.columns) == {"h", "m", "batch_id"}
+    assert df.filter("m = 2").count() == 4
+
+
 def test_compaction_serve_equivalence_and_crash_safety(spark, tmp_path):
     """Five admitted batches; serve-side answers (doc-tier verdicts, KMV
     estimate via merge, Bloom probe) are IDENTICAL before and after

@@ -2864,34 +2864,6 @@ def test_kmeans_persisted_out_exposes_releasable_handle(spark):
     assert not handles[0].is_cached
 
 
-def test_builder_fingerprint_tracks_names_and_nested_code():
-    """The fixture cache key must move when a builder edit only changes
-    co_names (e.g. .text(...)→.json(...)) and must stay STABLE for nested
-    lambdas (repr of a code object embeds a memory address — two
-    equal-content lambdas defined apart must digest identically)."""
-    from steam_data_engineer_project_spark.queries import _builder_fingerprint
-
-    def b_text(d):
-        return open(d).read()
-
-    def b_json(d):
-        return open(d).readline()  # same shapes, different co_names
-
-    assert _builder_fingerprint(b_text) != _builder_fingerprint(b_json)
-
-    def with_lambda_1(d):
-        return sorted([d], key=lambda x: x + "1")
-
-    def with_lambda_2(d):
-        return sorted([d], key=lambda x: x + "1")
-
-    def with_lambda_3(d):
-        return sorted([d], key=lambda x: x + "2")
-
-    assert _builder_fingerprint(with_lambda_1) == _builder_fingerprint(with_lambda_2)
-    assert _builder_fingerprint(with_lambda_1) != _builder_fingerprint(with_lambda_3)
-
-
 def test_kmv_merge_equals_direct_sketch_on_the_union(spark):
     """Mergeability — the sketch's selling point: sketch two disjoint
     shards separately, merge (union hash sets, re-take k smallest), and
@@ -3052,6 +3024,27 @@ def test_bloom_no_false_negatives_and_merge_equals_direct(spark):
     probe = union.withColumn("id", F.monotonically_increasing_id())
     res = bloom_probe_count(probe, "v", "id", direct, **kw)
     assert res.filter("n_hits != 1 OR n_probed != 1").count() == 0
+
+
+def test_bloom_rejects_fewer_than_one_hash(spark):
+    """With no hash functions every probed value would count as a hit (and
+    the build would set no bits), so both ends refuse the parameter, as
+    they refuse a partial last word."""
+    import pytest
+
+    from steam_data_engineer_project_spark.operators.bloom import (
+        bloom_bitset,
+        bloom_probe_count,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    bits = bloom_bitset(df, "v", m_bits=1 << 10, n_hashes=1)
+    for n_hashes in (0, -1):
+        kw = dict(m_bits=1 << 10, n_hashes=n_hashes)
+        with pytest.raises(ValueError, match="n_hashes"):
+            bloom_bitset(df, "v", **kw)
+        with pytest.raises(ValueError, match="n_hashes"):
+            bloom_probe_count(df, "v", "id", bits, **kw)
 
 
 def test_bloom_probe_matches_explode_aggregate_form(spark):
